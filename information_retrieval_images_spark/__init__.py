@@ -22,6 +22,7 @@ Package map:
 - ``oracle``     single-process exhaustive BM25 reference scorer
 - ``codec``      delta-gap + varint posting-block codec (numpy)
 - ``session``    tuned SparkSession builders
+- ``worker_daemon`` local-master Python worker daemon (import-path fix)
 - ``catalog``    Iceberg-or-parquet table IO
 - ``sources``    pages corpus reader/generator
 - ``operators``  index build, BM25 query engines, dedup, ANN

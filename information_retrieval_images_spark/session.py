@@ -11,11 +11,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host. A local-mode driver is the
+    executor, so its heap is sized for the box (the default 1g thrashes GC
+    once the corpus persist exceeds ~500 MB); on a real cluster it comes
+    from spark-submit/cluster conf instead. ``$SPARK_GRAFT_DRIVER_MEM`` when
+    set, else half of ``MemTotal`` (at least 1 GiB): the other half is for
+    the Python workers and the page cache, and on a host without swap a
+    heap larger than the box gets the process killed instead of collected.
+    4g where ``meminfo`` is unreadable."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{max(1024, kb // 2048)}m"
+
+
 SPARK_CONF = {
-    # local-mode driver == the executor: size its heap for the box (the
-    # default 1g thrashes GC once the corpus persist exceeds ~500 MB). On a
-    # real cluster these come from spark-submit/cluster conf instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     "spark.driver.maxResultSize": "4g",
     # Arrow batch transfer for every pandas UDF (the only Python in the plan).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -76,10 +93,44 @@ SPARK_CONF = {
 }
 
 
+def worker_conf(master: str) -> dict:
+    """Python-worker conf for a local master: workers start from
+    ``worker_daemon``, which keeps Spark's own archives off their import
+    path (see that module), and the package's parent directory — the repo,
+    or the ``--py-files`` zip — goes on their PYTHONPATH so the daemon
+    module resolves from any working directory. Empty for cluster masters:
+    the driver's paths mean nothing on an executor host."""
+    if not master.startswith("local"):
+        return {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    return {
+        "spark.python.daemon.module": f"{__package__}.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(here),
+    }
+
+
+def submitted_master() -> str | None:
+    """The master spark-submit launched this driver with (``--master``, or
+    ``spark.master`` from its defaults); None outside spark-submit. It is
+    read from the already-running JVM: before a SparkContext exists a bare
+    ``SparkConf()`` is an empty Python-side dict, and a master set on the
+    session builder would override the submitted one."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:  # set by spark-submit
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master")
+
+
 def get_spark(master: str | None = None, app_name: str = "ir-fulltext", extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.master(master or f"local[{cpus}]").appName(app_name)
-    for k, v in SPARK_CONF.items():
+    """The tuned session: SPARK_CONF, the host-sized driver heap and, for a
+    local master, the worker daemon. ``master`` defaults to the submitted
+    one under spark-submit, else ``local[$SPARK_GRAFT_CPUS]``."""
+    master = master or submitted_master() or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    builder = SparkSession.builder.master(master).appName(app_name)
+    conf = {**SPARK_CONF, "spark.driver.memory": driver_memory(), **worker_conf(master)}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -29,17 +29,13 @@ def main() -> None:
                     help="doc-id modulus (index-format parameter, pinned per index)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from information_retrieval_images_spark.catalog import Catalog
     from information_retrieval_images_spark.operators.index_build import build_index
-    from information_retrieval_images_spark.session import SPARK_CONF
+    from information_retrieval_images_spark.session import get_spark
     from information_retrieval_images_spark.sources.pages import read_pages
 
-    builder = SparkSession.builder.appName("ir-build-index")
-    for k, v in SPARK_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="ir-build-index")
+    print(f"master: {spark.sparkContext.master}")
 
     pages = read_pages(spark, args.pages)
     cat = Catalog(spark, args.warehouse)

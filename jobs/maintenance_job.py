@@ -28,17 +28,12 @@ def main() -> None:
     u.add_argument("--lang", default="en")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from information_retrieval_images_spark.catalog import Catalog
     from information_retrieval_images_spark.operators.maintenance import delete_docs, upsert_docs
-    from information_retrieval_images_spark.session import SPARK_CONF
+    from information_retrieval_images_spark.session import get_spark
     from information_retrieval_images_spark.sources.pages import read_pages
 
-    builder = SparkSession.builder.appName(f"ir-maintenance-{args.op}")
-    for k, v in SPARK_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name=f"ir-maintenance-{args.op}")
     cat = Catalog(spark, args.warehouse)
 
     if args.op == "delete":

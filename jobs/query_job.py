@@ -19,20 +19,16 @@ def main() -> None:
     ap.add_argument("--engine", choices=["wand", "naive"], default="wand")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from information_retrieval_images_spark.catalog import Catalog
     from information_retrieval_images_spark.operators.bm25 import (
         attach_urls,
         bm25_topk_naive,
         bm25_topk_wand,
     )
-    from information_retrieval_images_spark.session import SPARK_CONF
+    from information_retrieval_images_spark.session import get_spark
 
-    builder = SparkSession.builder.appName("ir-query")
-    for k, v in SPARK_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="ir-query")
+    print(f"master: {spark.sparkContext.master}")
 
     cat = Catalog(spark, args.warehouse)
     if args.queries_parquet:

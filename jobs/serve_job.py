@@ -18,15 +18,10 @@ def main() -> None:
     ap.add_argument("--engine", choices=["wand", "naive"], default="wand")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from information_retrieval_images_spark.serving import SearchSession, make_http_server
-    from information_retrieval_images_spark.session import SPARK_CONF
+    from information_retrieval_images_spark.session import get_spark
 
-    builder = SparkSession.builder.appName("ir-serve")
-    for k, v in SPARK_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="ir-serve")
 
     session = SearchSession(spark, args.warehouse, engine=args.engine)
     srv = make_http_server(session, host=args.host, port=args.port)

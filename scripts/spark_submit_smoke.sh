@@ -58,6 +58,15 @@ spark-submit --master "$MASTER" --py-files ir_spark.zip \
     > "$WORK/query.out" 2> "$WORK/query.err"
 cat "$WORK/query.out"
 
+# both jobs must have run on the submitted master, not on a default the
+# session builder put in its place
+for OUT in build query; do
+    if ! grep -qxF "master: $MASTER" "$WORK/$OUT.out"; then
+        echo "SMOKE_FAIL: $OUT job did not run on --master $MASTER"
+        exit 1
+    fi
+done
+
 NROWS="$(grep -c '^|0 ' "$WORK/query.out" || true)"
 if [ "$NROWS" -lt 1 ]; then
     echo "SMOKE_FAIL: query returned 0 result rows"

@@ -1,6 +1,7 @@
 """Serving path (reference server.py:128-177): SearchSession warm queries +
 the stdlib HTTP wrapper, rank-identical to the engines."""
 
+import itertools
 import json
 import threading
 import urllib.error
@@ -162,3 +163,93 @@ def test_http_search_requests_overlap(served, monkeypatch):
             assert [r["url"] for r in body["results"]] == [u for _, u, _ in want], q
     finally:
         srv.shutdown()
+
+
+_GROUP_IDS = itertools.count()
+
+
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, Spark job count)."""
+    sc = spark.sparkContext
+    gid = f"test-jobs-{next(_GROUP_IDS)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_search_job_budget(spark, served):
+    """The query path's Spark job budget: on a session warmed by one query
+    (stats_global and the postings DataFrame loaded) whose term cache is
+    still cold for the next query's terms, one fan-out-1 search is exactly
+    ONE Spark job (the scoring job; term dfs and urls are driver-side point
+    reads), and a query with no indexed term runs none."""
+    _, idx = served
+    session = SearchSession(spark, served[0].catalog.root)
+    session.search("term000001", k=3)
+    q = "term000002 term000005"
+    assert not set(q.split()) & set(session.catalog._term_df)
+    got, jobs = _jobs_in_group(spark, lambda: session.search(q, k=5))
+    assert jobs == 1
+    assert [r["url"] for r in got] == [url for _, url, _ in oracle_topk(idx, q, k=5)]
+    got, jobs = _jobs_in_group(spark, lambda: session.search("zzzznotindexed", k=5))
+    assert (got, jobs) == ([], 0)
+
+
+def test_term_dfs_point_read_matches_spark(spark, tmp_path):
+    """On a 2-bucket index the pyarrow term_dfs equals the Spark aggregate
+    over stats: df summed over buckets, 0 for absent terms, with and
+    without term-prefix pruning."""
+    from pyspark.sql import functions as F
+
+    from information_retrieval_images_spark.operators.index_build import term_prefix
+
+    cat = Catalog(spark, str(tmp_path))
+    build_index(spark, spark.createDataFrame(fixtures.make_pages_pandas(80)), cat, n_buckets=2)
+    per_bucket = cat.read("stats").groupBy("term").agg(F.countDistinct("bucket").alias("nb"))
+    both = sorted(r["term"] for r in per_bucket.where("nb = 2").limit(5).collect())
+    assert both  # the sum over buckets is exercised
+    terms = both + ["zzzznotindexed"]
+    want = {
+        r["term"]: int(r["df"])
+        for r in cat.read("stats").where(F.col("term").isin(terms)).groupBy("term").agg(F.sum("df").alias("df")).collect()
+    }
+    want = {t: want.get(t, 0) for t in terms}
+    assert want["zzzznotindexed"] == 0
+    tp_n = cat.tp_n()
+    assert Catalog(spark, str(tmp_path)).term_dfs(terms, tp_of=lambda t: term_prefix(t, tp_n)) == want
+    assert Catalog(spark, str(tmp_path)).term_dfs(terms) == want
+
+
+def test_http_500_replies_carry_length_and_class(served, monkeypatch):
+    """Engine failures reach the client as a complete JSON 500 (with
+    Content-Length) whose message leads with the exception class."""
+    session, _ = served
+
+    def boom(*a, **kw):
+        raise ZeroDivisionError("engine exploded")
+
+    monkeypatch.setattr(session, "engine", boom)
+    monkeypatch.setattr(session, "append", boom)
+    srv = make_http_server(session, port=0)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        port = srv.server_address[1]
+        append = urllib.request.Request(
+            f"http://127.0.0.1:{port}/append", data=b'{"pages": []}', method="POST"
+        )
+        for req in (f"http://127.0.0.1:{port}/search?q=term000001", append):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(req, timeout=60)
+            err = ei.value
+            body = err.read()
+            assert err.code == 500
+            assert int(err.headers["Content-Length"]) == len(body)
+            assert json.loads(body)["error"] == "ZeroDivisionError: engine exploded"
+    finally:
+        srv.shutdown()
+        srv.server_close()
